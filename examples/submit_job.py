@@ -43,8 +43,12 @@ def main() -> None:
     if bad:
         raise SystemExit(f"{bad} corpus rows fail the sha256 invariant")
     triples = build_triples(corpus)
+    # count and summarise a materialized triple set, not the lazy DAG
+    # (each action on it would re-run the emission and set-dedup)
     if out_dir:
-        write_outputs(triples, out_dir)
+        triples = write_outputs(triples, out_dir)
+    else:
+        triples = triples.localCheckpoint(eager=True)
     print("TRIPLES", triples.count())
     export_summary(triples).orderBy("repo", "dataset").show(10, truncate=False)
     spark.stop()

@@ -349,8 +349,16 @@ def write_outputs(
     out_dir: str,
     repo_buckets: int = 64,
     fmt: str = "parquet",
-) -> None:
-    """Persist triples + node/edge tables.
+) -> DataFrame:
+    """Persist triples + node/edge tables; return the written triples.
+
+    The triple DAG executes once, for the ``triples`` write.  The node
+    and edge tables are derived from that written table read back
+    (``spark.table`` for iceberg, a file scan otherwise), never from
+    the lazy ``triples`` frame, whose emission and set-dedup would
+    otherwise run again for each of them.  The read-back frame is
+    returned so callers count or summarise the graph without
+    rebuilding it.
 
     Cluster posture: Iceberg tables partitioned by ``bucket(repo)``
     (``fmt="iceberg"`` with ``out_dir`` = ``catalog.db`` prefix);
@@ -358,12 +366,18 @@ def write_outputs(
     file layout matches what a 1000-executor write would produce.
     """
     sep = "." if fmt == "iceberg" else "/"
-    t = triples.repartition(repo_buckets, "repo")
-    _write(t, f"{out_dir}{sep}triples", fmt)
-    nodes, edges = nodes_edges(triples)
+    target = f"{out_dir}{sep}triples"
+    _write(triples.repartition(repo_buckets, "repo"), target, fmt)
+    spark = triples.sparkSession
+    if fmt == "iceberg":
+        written = spark.table(target)
+    else:
+        written = spark.read.format(fmt).load(target)
+    nodes, edges = nodes_edges(written)
     small = max(repo_buckets // 4, 1)
     _write(nodes.repartition(small, "repo"), f"{out_dir}{sep}nodes", fmt)
     _write(edges.repartition(small, "repo"), f"{out_dir}{sep}edges", fmt)
+    return written
 
 
 __all__ = [

@@ -206,17 +206,55 @@ def test_nodes_edges(mini_triples):
     assert edges.where(F.col("dst") == "d1").count() == 0
 
 
+def _same_rows(got, want):
+    got = got.select(*want.columns)
+    return got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+
+
 def test_write_outputs_parquet_roundtrip(mini_triples, tmp_path):
     from powerbi_ontology_extractor_spark.pipeline import write_outputs
 
     out = str(tmp_path / "kg_out")
-    write_outputs(mini_triples, out, repo_buckets=4)
+    written = write_outputs(mini_triples, out, repo_buckets=4)
     spark = mini_triples.sparkSession
-    t = spark.read.parquet(f"{out}/triples")
     nodes, edges = nodes_edges(mini_triples)
-    assert t.count() == mini_triples.count()
-    assert spark.read.parquet(f"{out}/nodes").count() == nodes.count()
-    assert spark.read.parquet(f"{out}/edges").count() == edges.count()
+    assert _same_rows(written, mini_triples)
+    assert _same_rows(spark.read.parquet(f"{out}/triples"), mini_triples)
+    assert _same_rows(spark.read.parquet(f"{out}/nodes"), nodes)
+    assert _same_rows(spark.read.parquet(f"{out}/edges"), edges)
+
+
+def test_write_outputs_graph_reads_written_triples(
+    mini_triples, tmp_path, monkeypatch
+):
+    """nodes/edges are planned over the written triples table: their
+    optimized plans have a file scan of <out>/triples as the only leaf,
+    never the in-memory/checkpointed/local triple DAG."""
+    from powerbi_ontology_extractor_spark import pipeline
+
+    writes = {}
+    real_write = pipeline._write
+
+    def capture(df, target, fmt):
+        writes[target.rsplit("/", 1)[-1]] = df
+        real_write(df, target, fmt)
+
+    monkeypatch.setattr(pipeline, "_write", capture)
+    out = str(tmp_path / "kg_out")
+    pipeline.write_outputs(mini_triples, out, repo_buckets=4)
+    assert sorted(writes) == ["edges", "nodes", "triples"]
+    for name in ("nodes", "edges"):
+        leaves = writes[name]._jdf.queryExecution().optimizedPlan().collectLeaves()
+        leaves = [leaves.apply(i) for i in range(leaves.size())]
+        # a cached, checkpointed or local triple frame would show up as an
+        # InMemoryRelation / LogicalRDD / LocalRelation leaf
+        names = {leaf.nodeName() for leaf in leaves}
+        assert names == {"LogicalRelation"}, (name, names)
+        for leaf in leaves:
+            roots = leaf.relation().location().rootPaths()
+            paths = [roots.apply(i).toString() for i in range(roots.size())]
+            assert len(paths) == 1 and paths[0].endswith(f"{out}/triples"), (
+                name, paths)
 
 
 def test_write_outputs_iceberg_needs_catalog(mini_triples, tmp_path):
