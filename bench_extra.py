@@ -93,8 +93,8 @@ def main() -> None:
             parse_models,
         )
         from powerbi_ontology_extractor_spark.pipeline import (
-            _extract_generate_single_barrier,
             build_triples,
+            extract_generate,
         )
         from powerbi_ontology_extractor_spark.sources.corpus import corpus_df
 
@@ -115,7 +115,7 @@ def main() -> None:
         # B: full barrier round (models ckpt + 6-frame concurrent round)
         timed(
             "B_barrier_round",
-            lambda: _extract_generate_single_barrier(corpus),
+            lambda: extract_generate(corpus),
             trials=2,
         )
         # C: full build (what bench.py times)

@@ -418,7 +418,6 @@ def security_rules_df(models: DataFrame) -> DataFrame:
 def extract_all(
     corpus: DataFrame,
     materialize: bool = False,
-    family_barrier: bool = True,
 ) -> dict[str, DataFrame]:
     """Run the whole extraction stage; returns the model DataFrames.
 
@@ -432,11 +431,6 @@ def extract_all(
     barrier each branch would re-scan the parsed-model cache (dozens of
     extra stages; at cluster scale this boundary is an Iceberg write,
     see plans/manifest).
-
-    ``family_barrier=False`` keeps the essential models checkpoint but
-    skips the flat-family round — the barriers carry a fixed ~1-2 s
-    driver/job cost that only pays for itself on large corpora (the
-    pipeline picks per corpus size, see pipeline.BARRIER_MIN_MODELS).
     """
     models = parse_models(corpus)
     if materialize:
@@ -459,7 +453,7 @@ def extract_all(
             ["repo", "dataset"]
         ),
     }
-    if materialize and family_barrier:
+    if materialize:
         # checkpoint the FLAT family frames in ONE concurrent round
         # (they all derive from the already-materialized models
         # checkpoint, so the round costs max(job latency), not sum).
@@ -489,15 +483,6 @@ def ckpt_coalesce_target(df: DataFrame) -> int:
     return int(os.environ.get("PBI_KG_CKPT_PARTS", str(max(min(cores, 64), 4))))
 
 
-def checkpoint_one(d: DataFrame, target: int) -> DataFrame:
-    """coalesce + eager localCheckpoint of one frame.  coalesce never
-    RAISES a partition count, so the cap needs no getNumPartitions
-    probe — that call forced a physical-planning pass per frame BEFORE
-    the concurrent round (measured ~3 s of serial driver wedge at 400
-    repos in the round-5 job timeline)."""
-    return d.coalesce(target).localCheckpoint(eager=True)
-
-
 def checkpoint_parallel(dfs: list[DataFrame]) -> list[DataFrame]:
     """Eager-localCheckpoint several DataFrames concurrently — Spark
     accepts concurrent job submission, so the stage-boundary barrier
@@ -506,7 +491,11 @@ def checkpoint_parallel(dfs: list[DataFrame]) -> list[DataFrame]:
     Each frame is coalesced to ~core-count partitions first: the
     boundary tables are orders of magnitude smaller than the corpus,
     and the ~40 downstream emission stages each pay per-task scheduling
-    overhead per partition."""
+    overhead per partition.  coalesce never RAISES a partition count,
+    so the cap needs no getNumPartitions probe — that call forced a
+    physical-planning pass per frame BEFORE the concurrent round
+    (measured ~3 s of serial driver wedge at 400 repos in the round-5
+    job timeline)."""
     from concurrent.futures import ThreadPoolExecutor
 
     if not dfs:
@@ -514,4 +503,8 @@ def checkpoint_parallel(dfs: list[DataFrame]) -> list[DataFrame]:
     target = ckpt_coalesce_target(dfs[0])
 
     with ThreadPoolExecutor(max_workers=len(dfs)) as ex:
-        return list(ex.map(lambda d: checkpoint_one(d, target), dfs))
+        return list(
+            ex.map(
+                lambda d: d.coalesce(target).localCheckpoint(eager=True), dfs
+            )
+        )

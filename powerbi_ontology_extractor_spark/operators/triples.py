@@ -629,7 +629,6 @@ def export_triples(
     generated_at: str = DEFAULT_GENERATED_AT,
     include_lineage: bool = True,
     dedup: bool = True,
-    prebuilt: dict[str, DataFrame] | None = None,
 ) -> DataFrame:
     """Full OWL export (owl.py:79-112 orchestration): union of all
     families + set dedup.  Matches the reference graph triple-for-triple
@@ -638,25 +637,13 @@ def export_triples(
     ``dedup=False`` skips the set-dedup shuffle — for callers (the full
     pipeline) that union further families and apply ONE global dedup at
     the end; two full-row dedup shuffles of long URI/literal strings
-    was the flagship job's single biggest exchange.
-
-    ``prebuilt`` may carry 'metadata'/'base_class' frames constructed
-    during the pipeline's barrier overlap — the same builders with the
-    same (datasets, generated_at/roles) args, just built while the
-    checkpoint round ran; the union ORDER is unchanged."""
-    pre = prebuilt or {}
+    was the flagship job's single biggest exchange."""
     datasets = model_dfs.get("datasets")
     if datasets is None:
         datasets = datasets_df(model_dfs["models"])
-    meta = pre.get("metadata")
-    if meta is None:
-        meta = ontology_metadata_triples(datasets, generated_at)
-    base = pre.get("base_class")
-    if base is None:
-        base = base_class_triples(datasets, roles)
     fams = [
-        meta,
-        base,
+        ontology_metadata_triples(datasets, generated_at),
+        base_class_triples(datasets, roles),
         entity_triples(ontology_dfs["ontology_entities"]),
         property_triples(model_dfs["properties"]),
         relationship_triples(ontology_dfs["ontology_relationships"]),

@@ -154,19 +154,10 @@ def run_pipeline_resumable(
     A rerun after a crash (or a no-op rerun) recomputes nothing whose
     output is intact for the same corpus fingerprint.
     """
-    from powerbi_ontology_extractor_spark.functions.layout import report_triples
-    from powerbi_ontology_extractor_spark.functions.mquery import (
-        m_datasource_triples,
+    from powerbi_ontology_extractor_spark.pipeline import (
+        build_triples,
+        nodes_edges,
     )
-    from powerbi_ontology_extractor_spark.operators.extract import extract_all
-    from powerbi_ontology_extractor_spark.operators.ontology import (
-        generate_ontology,
-    )
-    from powerbi_ontology_extractor_spark.operators.triples import (
-        TRIPLE_COLS,
-        export_triples,
-    )
-    from powerbi_ontology_extractor_spark.pipeline import nodes_edges
 
     runner = ManifestRunner(spark, run_dir)
     fp = runner.corpus_fingerprint(corpus)
@@ -180,17 +171,8 @@ def run_pipeline_resumable(
         bad.select("repo", "path"), ["repo", "path"], "left_anti"
     )
 
-    def stage_triples() -> DataFrame:
-        model_dfs = extract_all(good, materialize=True)
-        onto_dfs = generate_ontology(model_dfs, materialize=True)
-        t = export_triples(onto_dfs, model_dfs)
-        t = t.unionByName(
-            m_datasource_triples(good, model_dfs["datasets"])
-        ).unionByName(report_triples(good, model_dfs["datasets"]))
-        return t.dropDuplicates(TRIPLE_COLS)
-
     triples = runner.run_stage(
-        "triples", stage_triples, fp, partition_cols=["repo"],
+        "triples", lambda: build_triples(good), fp, partition_cols=["repo"],
         num_partitions=repo_buckets,
     )
     nodes = runner.run_stage(

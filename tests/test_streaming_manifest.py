@@ -93,6 +93,16 @@ def test_manifest_resume(spark, tmp_path):
     assert recs["triples"].status == "completed"
     assert sum(recs["triples"].partition_rows) == n1
 
+    # the triples stage is the pipeline's own triple set (constraint
+    # families included), not a private re-assembly of it
+    from powerbi_ontology_extractor_spark.operators.triples import TRIPLE_COLS
+    from powerbi_ontology_extractor_spark.pipeline import build_triples
+
+    got = out["triples"].select(*TRIPLE_COLS)
+    want = build_triples(c).select(*TRIPLE_COLS)
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+
     # tamper-proof resume: delete nothing, rerun → same outputs, no new
     # manifest rows (stages skipped)
     before = len(manifest.records())
